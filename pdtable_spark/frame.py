@@ -115,21 +115,56 @@ def attach_units(
     return df
 
 
+def arrow_frame(
+    spark: SparkSession, columns: Sequence[Sequence], schema: T.StructType
+) -> DataFrame:
+    """Driver-held column lists (one per field of ``schema``) → DataFrame,
+    shipped to the JVM as one ``pyarrow.Table``.
+
+    The result is a JVM-only ``LocalTableScan`` that keeps the schema's
+    field metadata: no row is verified and pickled one by one in Python, and
+    no later action starts a Python worker (the pickled-row
+    ``createDataFrame(list, schema)`` path backs the frame with a Python RDD
+    instead).  The ``pyarrow.Table`` path converts through Arrow whatever
+    the session's arrow conf says.
+
+    Naive datetimes keep their wall-clock value: they are converted with
+    ``TimestampType().toInternal`` (the process time zone, the rule of the
+    pickled path) and shipped as UTC instants.  Left to itself Arrow would
+    read them in the session time zone instead.  A value Arrow cannot store
+    in its field's type raises; there is no fallback path.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    arrays = []
+    for values, field in zip(columns, schema.fields):
+        dtype = field.dataType
+        arrow_type = to_arrow_type(dtype)
+        if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+            values = [None if v is None else dtype.toInternal(v) for v in values]
+        if pa.types.is_integer(arrow_type):
+            # a typed pa.array truncates 3.5 to 3; a safe cast refuses it
+            arrays.append(pa.array(values).cast(arrow_type))
+        else:
+            arrays.append(pa.array(values, type=arrow_type))
+    table = pa.Table.from_arrays(arrays, names=schema.names)
+    return spark.createDataFrame(table, schema=schema)
+
+
 def table_from_parsed(parsed, spark: Optional[SparkSession] = None):
     """ParsedTable (pure Python) → Spark-backed Table.
 
-    The Spark analog of blocks.py:224-241: ``spark.createDataFrame`` with a
-    unit-derived schema instead of ``pd.DataFrame`` + ``ComplementaryTableInfo``.
+    The Spark analog of blocks.py:224-241: the parsed columns go through
+    :func:`arrow_frame` with a unit-derived schema, instead of
+    ``pd.DataFrame`` + ``ComplementaryTableInfo``, so the Table is a
+    JVM-local relation carrying its units in ``StructField.metadata``.
     """
     from pdtable_spark.table import Table
 
     spark = active_spark(spark)
     schema = schema_for_units(parsed.column_names, parsed.units)
-    rows = list(zip(*(parsed.columns[c] for c in parsed.column_names)))
-    if not parsed.column_names:
-        df = spark.createDataFrame([], schema=T.StructType([]))
-    else:
-        df = spark.createDataFrame(rows, schema=schema)
+    df = arrow_frame(spark, [parsed.columns[c] for c in parsed.column_names], schema)
     meta = TableMetadata(
         name=parsed.name,
         destinations=set(parsed.destinations),

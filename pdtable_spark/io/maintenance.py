@@ -557,34 +557,19 @@ def _norm_file_col(c: Column) -> Column:
 
 def _snapshot_frame(spark: SparkSession, values, name: str, dtype) -> DataFrame:
     """A driver-collected snapshot (file list / key set) as a SMALL
-    JVM-executable frame: Arrow-path ``createDataFrame`` ships the
-    values to the JVM once at creation, so downstream actions run with
-    no Python worker (the lineage is a plain ParallelCollectionRDD —
-    verified, unlike the pickled-row path the ``write_zone_map`` lesson
-    is about), and the PLAN stays O(1) in the snapshot size — an
-    ``isin`` literal grows the plan per element, and at millions of
+    JVM-executable frame through :func:`~pdtable_spark.frame.arrow_frame`:
+    the values ship to the JVM once at creation, so downstream actions run
+    with no Python worker, and the PLAN stays O(1) in the snapshot size —
+    an ``isin`` literal grows the plan per element, and at millions of
     entries plan construction and driver memory blow up (ADVICE r12).
     The snapshot property itself is preserved: the values are frozen at
     call time, exactly like the literal spelling."""
     from pyspark.sql.types import StructField, StructType
 
-    schema = StructType([StructField(name, dtype, True)])
-    if not values:
-        return spark.createDataFrame([], schema)
-    try:
-        # the pyarrow.Table path serializes via Arrow REGARDLESS of the
-        # session's arrow conf (verified: ParallelCollectionRDD lineage
-        # with the conf off) — no mutation of shared session state, so
-        # concurrent createDataFrame calls on other threads are never
-        # raced onto a different conversion path
-        import pyarrow as pa
+    from pdtable_spark.frame import arrow_frame
 
-        return spark.createDataFrame(pa.table({name: list(values)}), schema=schema)
-    except Exception:
-        # exotic value types pyarrow cannot infer: fall back to the
-        # row-list path (correct for any Spark type; slower — fine for
-        # the rare case)
-        return spark.createDataFrame([(v,) for v in values], schema)
+    schema = StructType([StructField(name, dtype, True)])
+    return arrow_frame(spark, [list(values)], schema)
 
 
 def _keep_covered_rows(

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdtable_spark.operators.scanfan import fanout_small_scan
+from pdtable_spark.operators.text import _tokens_sql
 
 
 def corpus_drift_report(
@@ -307,9 +308,7 @@ def threshold_sweep(
     by = list(by or [])
     cols = [*[f"`{c}`" for c in by], f"`{score_col}` AS __s"]
     if text_col is not None:
-        cols.append(
-            f"CAST(size(split(trim(`{text_col}`), '\\\\s+')) AS BIGINT) AS __tok"
-        )
+        cols.append(f"CAST(size({_tokens_sql(f'`{text_col}`')}) AS BIGINT) AS __tok")
     base = df.selectExpr(*cols)
     aggs = ["count(1) AS __n"]
     if text_col is not None:

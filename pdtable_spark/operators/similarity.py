@@ -176,20 +176,20 @@ def _matrix_frame(df: DataFrame, name: str, matrix, depth: int) -> DataFrame:
     nested-array DATA via a broadcast single-row cross join — the
     plan-size-safe alternative to inlining it as per-element literals.
 
-    The single row ships via the pyarrow ``createDataFrame`` path (the
-    ``_snapshot_frame`` lesson, r15): Arrow conversion works regardless
-    of the session's arrow conf and backs the relation with a plain JVM
-    lineage — the pickled-row fallback costs ~180 ms of driver time per
-    build AND launches a Python worker for the one-row side inside every
-    downstream action (guide §4: the JVM↔Python boundary)."""
-    schema = f"{name}: " + "array<" * depth + "double" + ">" * depth
-    spark = df.sparkSession
-    try:
-        import pyarrow as pa
+    The single row ships through :func:`~pdtable_spark.frame.arrow_frame`,
+    which backs the relation with a plain JVM lineage — a pickled row
+    costs ~180 ms of driver time per build AND launches a Python worker
+    for the one-row side inside every downstream action (guide §4: the
+    JVM↔Python boundary)."""
+    from pyspark.sql import types as T
 
-        one = spark.createDataFrame(pa.table({name: [matrix]}), schema=schema)
-    except Exception:
-        one = spark.createDataFrame([(matrix,)], schema)
+    from pdtable_spark.frame import arrow_frame
+
+    dtype = T.DoubleType()
+    for _ in range(depth):
+        dtype = T.ArrayType(dtype)
+    schema = T.StructType([T.StructField(name, dtype)])
+    one = arrow_frame(df.sparkSession, [[matrix]], schema)
     return df.crossJoin(F.broadcast(one))
 
 

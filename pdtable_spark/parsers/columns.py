@@ -10,9 +10,10 @@ Parity with reference ``pdtable/io/parsers/columns.py``:
 | anything else | float      | ``-``/``nan`` → None/NaN (columns.py:71-112) |
 
 Differences from the reference: missing values are represented as ``None``
-(Spark null) rather than NaN/NaT sentinels — ``None`` round-trips through
-``spark.createDataFrame`` and parquet cleanly, and the CSV writer renders it
-back as ``-`` (io/_represent.py:8-54).
+(Spark null) rather than NaN/NaT sentinels — ``None`` becomes an Arrow null
+in ``frame.arrow_frame`` (which builds every parsed Table) and round-trips
+through parquet cleanly, and the CSV writer renders it back as ``-``
+(io/_represent.py:8-54).
 """
 
 from __future__ import annotations

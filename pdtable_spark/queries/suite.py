@@ -4854,7 +4854,7 @@ def dedup_normalized(spark, sf_dir):
 _SPAN_WORDS = 8
 
 _SQL_SPAN_DEDUP = f"""
-    WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\s+'), w -> w <> '') AS ws FROM documents),
+    WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\\s+'), w -> w <> '') AS ws FROM documents),
     w AS (
       SELECT doc_id,
              unnest(ws) AS word,
@@ -5102,7 +5102,7 @@ def q_user_skew_report(spark, sf_dir):
 _NOVELTY_N = 3
 
 _SQL_NGRAM_NOVELTY = f"""
-    WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS ws
+    WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ws
                FROM documents),
     e AS (
       SELECT doc_id, ws,
@@ -5552,8 +5552,8 @@ _CDC_DIVISOR = 8
 _SQL_CDC_CHUNKS = f"""
     WITH w AS (
       SELECT doc_id,
-             unnest(regexp_split_to_array(trim(text), '\s+')) AS word,
-             unnest(generate_series(1, len(regexp_split_to_array(trim(text), '\s+')))) AS pos
+             unnest(regexp_split_to_array(trim(text), '\\s+')) AS word,
+             unnest(generate_series(1, len(regexp_split_to_array(trim(text), '\\s+')))) AS pos
       FROM documents
     ),
     g AS (

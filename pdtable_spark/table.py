@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 
 from pdtable_spark.frame import (
     InvalidTableCombineError,
+    arrow_frame,
     attach_units,
     check_units_compatible,
     coerce_value_for_unit,
@@ -516,10 +517,11 @@ class Table:
             vals = [row.get(c) for c in self.column_names]
         else:
             vals = list(row)
-        coerced = tuple(
-            coerce_value_for_unit(v, cm[c].unit) for v, c in zip(vals, self.column_names)
+        one = arrow_frame(
+            self.spark,
+            [[coerce_value_for_unit(v, cm[c].unit)] for v, c in zip(vals, self.column_names)],
+            self._df.schema,
         )
-        one = self.spark.createDataFrame([coerced], schema=self._df.schema)
         return self._derive(self._df.unionByName(one), "append_row")
 
     def rename_column(self, old: str, new: str) -> "Table":
@@ -537,11 +539,9 @@ class Table:
         rows = self._df.collect()
         names = self.column_names
         out_cols = ["column"] + [f"row_{i}" for i in range(len(rows))]
-        data = [
-            tuple([name] + [str(row[name]) for row in rows]) for name in names
-        ]
+        columns = [names] + [[str(row[name]) for name in names] for row in rows]
         schema = schema_for_units(out_cols, ["text"] * len(out_cols))
-        df = self.spark.createDataFrame(data, schema=schema)
+        df = arrow_frame(self.spark, columns, schema)
         return self._derive(df, "transpose")
 
     def pivot(
@@ -807,7 +807,5 @@ def _df_from_values(spark: SparkSession, name: str, values: list, unit: str) -> 
         T.StructField("__row_idx__", T.LongType(), False),
         schema.fields[1],
     ]
-    coerced = [
-        (i, coerce_value_for_unit(v, unit)) for i, v in enumerate(values)
-    ]
-    return spark.createDataFrame(coerced, schema=T.StructType(fields))
+    coerced = [coerce_value_for_unit(v, unit) for v in values]
+    return arrow_frame(spark, [list(range(len(values))), coerced], T.StructType(fields))

@@ -718,3 +718,137 @@ def test_startable_stream_read_rejects_metadata_schema(spark, tmp_path):
     )
     with pytest.raises(Exception, match="metadata"):
         q.awaitTermination(120)
+
+
+# ---------------------------------------------------------------------------
+# Driver-built Tables are JVM-local (arrow_frame); scan_csv layout
+# ---------------------------------------------------------------------------
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def assert_jvm_local(df):
+    """No Python-RDD relation in the plan: later actions start no Python
+    worker for this frame."""
+    plan = _plan(df)
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
+
+
+def test_read_csv_tables_are_jvm_local_with_units(spark):
+    bundle = TableBundle(read_csv(io.StringIO(CSV)))
+    for name, units in (("places", ["text", "km", "onoff"]), ("other", ["-"])):
+        t = bundle[name]
+        assert_jvm_local(t.df)
+        assert t.units == units
+        assert [f.metadata["pdtable"]["unit"] for f in t.df.schema.fields] == units
+    assert bundle["places"].df.collect()[1]["distance"] == 14.5
+
+
+def test_load_files_tables_are_jvm_local(spark, tmp_path):
+    from pdtable_spark.io.load import load_files
+
+    (tmp_path / "root.csv").write_text("***include;\ninc.csv\n\n" + CSV)
+    (tmp_path / "inc.csv").write_text("**inc;\nall\nw\nkg\n1.5\n\n")
+    tables = [b for bt, b in load_files([str(tmp_path / "root.csv")]) if bt == BlockType.TABLE]
+    assert sorted(t.name for t in tables) == ["inc", "other", "places"]
+    for t in tables:
+        assert_jvm_local(t.df)
+    assert {t.name: t.units for t in tables}["inc"] == ["kg"]
+
+
+def test_json_data_to_table_is_jvm_local(spark):
+    t = TableBundle(read_csv(io.StringIO(CSV)))["places"]
+    t2 = json_data_to_table(table_to_json_data(t), spark=spark)
+    assert_jvm_local(t2.df)
+    assert t2.units == ["text", "km", "onoff"]
+    assert t.equals(t2)
+
+
+def test_zero_row_and_zero_column_tables_build(spark):
+    from pdtable_spark.frame import table_from_parsed
+    from pdtable_spark.parsers.blocks import ParsedTable
+
+    empty = ParsedTable(
+        name="e",
+        destinations=["all"],
+        column_names=["d", "x", "s", "b"],
+        units=["datetime", "kg", "text", "onoff"],
+        columns={"d": [], "x": [], "s": [], "b": []},
+    )
+    t = table_from_parsed(empty, spark=spark)
+    assert t.count() == 0
+    assert t.units == ["datetime", "kg", "text", "onoff"]
+    assert_jvm_local(t.df)
+    bare = ParsedTable(name="z", destinations=["all"], column_names=[], units=[], columns={})
+    z = table_from_parsed(bare, spark=spark)
+    assert z.column_names == [] and z.count() == 0
+
+
+def test_read_csv_naive_datetime_keeps_wall_clock_under_non_utc_tz(spark):
+    """A naive datetime means the same wall-clock time on the way in and
+    out, whatever the process time zone (the session runs in UTC)."""
+    import datetime as dt
+    import os
+    import time
+
+    text = "**when;\nall\nat;v\ndatetime;-\n2020-01-02 12:00:00;1\n-;2\n\n"
+    old = os.environ.get("TZ")
+    try:
+        for tz in ("America/New_York", "Asia/Kolkata"):
+            os.environ["TZ"] = tz
+            time.tzset()
+            t = TableBundle(read_csv(io.StringIO(text)))["when"]
+            assert [r["at"] for r in t.df.collect()] == [dt.datetime(2020, 1, 2, 12, 0), None]
+            out = io.StringIO()
+            write_csv(t, out)
+            assert "2020-01-02 12:00:00;1.0" in out.getvalue()
+    finally:
+        if old is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+
+
+def _scan_files(tmp_path, n_files):
+    for i in range(n_files):
+        (tmp_path / f"f{i:02d}.csv").write_text(f"**m;\nall\nfile\n-\n{i}\n\n")
+    return str(tmp_path / "*.csv")
+
+
+@pytest.mark.parametrize("n_files,min_partitions", [(7, None), (10, 3), (5, 9)])
+def test_scan_csv_even_partitions_no_exchange(spark, tmp_path, n_files, min_partitions):
+    """Exactly n_part partitions whose file counts differ by at most one,
+    with no shuffle — also when min_partitions exceeds defaultParallelism
+    (a bare local scan would cap the partition count there)."""
+    t = scan_csv(spark, _scan_files(tmp_path, n_files), "m", min_partitions=min_partitions)
+    assert "Exchange" not in _plan(t.df)
+    if min_partitions is not None:
+        assert t.df.rdd.getNumPartitions() == min_partitions
+    sizes = t.df.rdd.glom().map(len).collect()  # one row per file
+    assert sum(sizes) == n_files
+    assert max(sizes) - min(sizes) <= 1
+    assert sorted(r["file"] for r in t.df.collect()) == [float(i) for i in range(n_files)]
+
+
+def test_scan_csv_reads_empty_distributed_blocks(spark, tmp_path):
+    """write_csv_distributed writes a header-only block for each empty
+    partition; scan_csv must read those as zero rows, datetime columns
+    included."""
+    import datetime as dt
+
+    from pdtable_spark.io.csv import write_csv_distributed
+
+    text = "**ev;\nall\nat;v\ndatetime;kg\n2020-01-02 12:00:00;1\n2021-03-04 05:06:07;2\n\n"
+    t = TableBundle(read_csv(io.StringIO(text)))["ev"]
+    out = str(tmp_path / "out")
+    write_csv_distributed(Table(t.df.repartition(4), metadata=t.metadata), out)
+    back = scan_csv(spark, out + "/part-*", "ev")
+    assert back.units == ["datetime", "kg"]
+    assert sorted((r["at"], r["v"]) for r in back.df.collect()) == [
+        (dt.datetime(2020, 1, 2, 12, 0), 1.0),
+        (dt.datetime(2021, 3, 4, 5, 6, 7), 2.0),
+    ]

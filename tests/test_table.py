@@ -282,3 +282,46 @@ def test_unit_arithmetic(spark):
         t["distance"] + t["hours"]
     with pytest.raises(UnitMismatchError):
         t["place"] * t["distance"]
+
+
+def _assert_jvm_local(t):
+    plan = t.df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+
+
+def make_local_places(spark):
+    from pdtable_spark.frame import arrow_frame
+
+    schema = schema_for_units(["place", "distance", "is_hot"], ["text", "km", "onoff"])
+    cols = [["home", "work", "beach"], [0.0, 14.5, 2.0], [True, False, True]]
+    return Table(arrow_frame(spark, cols, schema), name="places")
+
+
+def test_append_row_is_jvm_local(spark):
+    t = make_local_places(spark).append_row({"place": "moon", "distance": 384400, "is_hot": 0})
+    _assert_jvm_local(t)
+    assert t.units == ["text", "km", "onoff"]
+    assert t.df.collect()[-1] == ("moon", 384400.0, False)
+
+
+def test_transpose_is_jvm_local(spark):
+    flipped = make_local_places(spark).transpose()
+    _assert_jvm_local(flipped)
+    assert flipped.column_names == ["column", "row_0", "row_1", "row_2"]
+    assert flipped.df.collect()[1] == ("distance", "0.0", "14.5", "2.0")
+
+
+def test_setitem_values_is_jvm_local(spark):
+    t = make_local_places(spark)
+    t["rating"] = [3.0, None, 5.0]
+    t["note"] = ["a", "b", "c"]
+    _assert_jvm_local(t)
+    assert t.units == ["text", "km", "onoff", "-", "text"]
+    assert [r["rating"] for r in t.df.collect()] == [3.0, None, 5.0]
+
+
+def test_append_row_integer_column_refuses_truncation(spark):
+    t = Table(spark.range(2).withColumnRenamed("id", "n"), name="ints")
+    assert [r["n"] for r in t.append_row([5]).df.collect()] == [0, 1, 5]
+    with pytest.raises(Exception, match="truncated"):
+        t.append_row([2.5])
