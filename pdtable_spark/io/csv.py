@@ -16,6 +16,11 @@ Scale paths beyond the reference (SURVEY §2.1 S1):
   differ by at most one file.  The block filter means
   non-matching tables in each file cost one top-left-cell peek — the format's
   native predicate pushdown.
+- ``write_csv_distributed`` — one self-contained StarTable file per task,
+  rendered by Spark SQL expressions and written by Spark's ``text`` writer:
+  no row leaves the JVM (a ``display_format`` column is the one exception,
+  see its docstring).  Datetimes follow the session time zone.  Its output
+  directory is a valid ``scan_csv`` input.
 - ``write_csv`` with a DataFrame-sized table falls back to
   ``toLocalIterator`` (constant driver memory) rather than ``collect``.
 """
@@ -28,7 +33,11 @@ from pathlib import Path
 from typing import Callable, Iterable, Optional, TextIO, Union
 
 from pdtable_spark.auxiliary import CSV_SEP
-from pdtable_spark.io._represent import represent_col_elements, represent_row_elements
+from pdtable_spark.io._represent import (
+    block_header,
+    represent_col_elements,
+    represent_row_elements,
+)
 from pdtable_spark.model.origin import (
     FilesystemLocationFile,
     InputIssueTracker,
@@ -103,8 +112,9 @@ def scan_csv(
     be tokenized whole); local files are dealt out by position, task ``i``
     of ``n_part`` (``min_partitions``, else ``min(files, 2 × cores)``)
     parsing ``files[i::n_part]``; the early block filter skips non-matching
-    tables at one-cell cost; the schema (column names + units) is taken from
-    the first file on the driver, then executors emit Arrow batches of the
+    tables at one-cell cost; the schema (column names + units) is taken on
+    the driver from the first file that holds the table (a directory skips
+    hidden ``_``/``.`` names), then executors emit Arrow batches of the
     parsed columns (row tuples on the Hadoop path) — no Table objects cross
     the wire.
 
@@ -140,22 +150,26 @@ def scan_csv(
     local_paths = _expand_local_paths(path_spec)
 
     if local_paths:
-        # streaming probe: reads only up to the first matching table
-        with open(local_paths[0]) as f:
-            probe = _parse_named_tables_lines(f, table_name, sep, permissive)
-            try:
-                first = next(probe)
-            except StopIteration:
-                raise LookupError(
-                    f"Table '{table_name}' not found in first file of {path_spec}"
-                )
+        # streaming probe: the first file that holds the table (an empty
+        # part file holds none); each file is read only up to its first match
+        first = None
+        for path in local_paths:
+            with open(path) as f:
+                first = next(_parse_named_tables_lines(f, table_name, sep, permissive), None)
+            if first is not None:
+                break
     else:
-        first_text = spark.sparkContext.wholeTextFiles(path_spec).values().first()
-        probe = _parse_named_tables(first_text, table_name, sep, permissive)
-        try:
-            first = next(probe)
-        except StopIteration:
-            raise LookupError(f"Table '{table_name}' not found in first file of {path_spec}")
+        first = next(
+            iter(
+                spark.sparkContext.wholeTextFiles(path_spec)
+                .values()
+                .flatMap(lambda text: _parse_named_tables(text, table_name, sep, permissive))
+                .take(1)
+            ),
+            None,
+        )
+    if first is None:
+        raise LookupError(f"Table '{table_name}' not found in any file of {path_spec}")
     column_names, units = first.column_names, first.units
     schema = schema_for_units(column_names, units)
 
@@ -220,7 +234,9 @@ def scan_csv(
 
 def _expand_local_paths(path_spec: str):
     """Resolve a comma-joined glob spec to local files; [] when any part
-    has a URI scheme (handled by the Hadoop path instead)."""
+    has a URI scheme (handled by the Hadoop path instead).  A directory
+    expands to its files, skipping hidden names (leading ``_`` or ``.``,
+    Spark's rule: ``_SUCCESS``, checksum files)."""
     import glob as _glob
 
     out = []
@@ -229,9 +245,15 @@ def _expand_local_paths(path_spec: str):
         if "://" in p:
             return []
         p = p[len("file:"):] if p.startswith("file:") else p
-        matches = sorted(_glob.glob(p))
         if os.path.isdir(p):
-            matches = sorted(_glob.glob(os.path.join(p, "*")))
+            matches = sorted(
+                os.path.join(p, name)
+                for name in os.listdir(p)
+                if not name.startswith(("_", "."))
+                and os.path.isfile(os.path.join(p, name))
+            )
+        else:
+            matches = sorted(_glob.glob(p))
         out.extend(matches)
     return out
 
@@ -312,15 +334,34 @@ def write_csv_distributed(
     sep: Optional[str] = None,
     na_rep: str = "-",
 ) -> None:
-    """Distributed StarTable CSV dump: each partition writes one valid
-    StarTable CSV file (``part-NNNNN.csv`` with the full ``**name`` /
-    destinations / names / units block header) — the W1 scale path.
+    """Distributed StarTable CSV dump — the W1 scale path.  Each task writes
+    one valid StarTable file, ``part-NNNNN-<uuid>-c000.txt``, that starts with
+    the full ``**name`` / destinations / names / units block header.  A table
+    with no rows gives one header-only file.  Partition 0's file is written
+    even when that partition is empty, so a file may hold no block at all;
+    :func:`scan_csv` skips it.
+
+    The rows are rendered with Spark SQL expressions and written by Spark's
+    ``text`` writer, so the data never passes through the driver or a Python
+    worker.  The cell rules are those of :func:`write_csv`, with two
+    differences of spelling:
+
+    - datetimes are written in ``spark.sql.session.timeZone`` (the zone
+      every executor shares), ``write_csv`` uses the driver's process zone;
+    - doubles take Java's spelling, which keeps every bit but differs from
+      Python's for |x| ≥ 1e7 or < 1e-3 (``1.0E7``, ``1.0E-4``) and for
+      infinities (``Infinity``).  Both readers parse it.
+
+    A column with a ``display_format`` is the one exception: it is formatted
+    by Python's ``format()`` in an Arrow-batched UDF over that column alone,
+    because the JVM has no equivalent of the format mini-language.
 
     The result directory round-trips through :func:`scan_csv` (per-file
     block structure is self-contained), so 100 TB tables never serialize
     through the driver.  Transposed layout is driver-sized by definition
     (one line per column) — use :func:`write_csv` for those.
     """
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     if sep is None:
@@ -328,38 +369,98 @@ def write_csv_distributed(
     if table.metadata.transposed:
         raise ValueError("transposed tables are driver-sized; use write_csv")
 
+    df = table.df
     cm = table.column_metadata
     names = table.column_names
-    units = table.units
-    fmts = [cm[c].display_format for c in names]
-    header = (
-        f"**{table.name}{sep}\n"
-        + " ".join(str(d) for d in sorted(table.destinations))
-        + "\n"
-        + sep.join(names)
-        + "\n"
-        + sep.join(units)
-        + "\n"
+    units = [cm[c].unit for c in names]
+    header = block_header(table.name, table.destinations, sep, names=names, units=units)
+    line = F.concat_ws(
+        sep,
+        *(
+            _cell_sql(name, field.dataType, unit, cm[name].display_format, na_rep, i == 0)
+            for i, (name, field, unit) in enumerate(zip(names, df.schema.fields, units))
+        ),
     )
+    # The header rides on the first row of each partition: the one whose
+    # in-partition counter (the low 33 bits of monotonically_increasing_id)
+    # is 0.  This projection feeds the text writer in the same task with
+    # nothing in between (no exchange, no sort, and maxRecordsPerFile=0
+    # keeps one file per task), so that row is the first line of the file.
+    first_row = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1) == 0
+    counted = Observation()
+    (
+        df.observe(counted, F.count(F.lit(1)).alias("rows"))
+        .select(F.when(first_row, F.concat(F.lit(header), line)).otherwise(line).alias("value"))
+        .write.option("maxRecordsPerFile", 0)
+        .text(out_dir)
+    )
+    if counted.get["rows"] == 0:
+        # no row carried the header: replace the empty output with one
+        # header-only file (a JVM-only one-row frame, no Python worker)
+        (
+            df.sparkSession.range(1, numPartitions=1)
+            .select(F.lit(header.rstrip("\n")).alias("value"))
+            .write.mode("overwrite")
+            .text(out_dir)
+        )
 
-    def to_lines(rows):
-        yield header.rstrip("\n")  # multi-line block header, one per file
-        for row in rows:
-            vals = represent_row_elements(tuple(row), units, na_rep)
-            out = []
-            for v, fmt_ in zip(vals, fmts):
-                if isinstance(v, str):
-                    out.append(v)
-                elif fmt_ is not None and isinstance(v, (int, float)) and not isinstance(v, bool):
-                    out.append(fmt_.format(v))
-                else:
-                    out.append(str(v))
-            yield sep.join(out)
-        yield ""  # blank line terminates the block
 
-    # saveAsTextFile → one self-contained StarTable file per partition via
-    # the Hadoop committer (atomic on HDFS/S3/local alike)
-    table.df.rdd.mapPartitions(to_lines).saveAsTextFile(out_dir)
+def _cell_sql(name: str, dtype, unit: str, display_format, na_rep: str, first: bool):
+    """One StarTable cell as a never-null string Column: the rules of
+    ``represent_row_elements`` + ``_format_value`` in Spark SQL."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    col = F.col("`" + name.replace("`", "``") + "`")
+    plain = (T.BooleanType, T.IntegralType, T.FloatType, T.DoubleType)
+    if display_format is not None and unit != "text" and isinstance(dtype, plain):
+        # the JVM has no equivalent of Python's format mini-language: one
+        # Arrow-batched UDF over this column, fed the values write_csv sees
+        def render(value):
+            (cell,) = represent_row_elements((value,), (unit,), na_rep)
+            return _format_value(cell, display_format)
+
+        return F.udf(render, "string", useArrow=True)(col)
+
+    if isinstance(dtype, T.BooleanType):
+        value = F.when(col, F.lit("True")).when(~col, F.lit("False"))
+    elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+        # Python's str(datetime): microseconds only when non-zero
+        value = F.regexp_replace(
+            F.date_format(col, "yyyy-MM-dd HH:mm:ss.SSSSSS"), r"\.000000$", ""
+        )
+    elif isinstance(dtype, T.FloatType):
+        value = col.cast("double").cast("string")
+    else:
+        value = col.cast("string")
+
+    if unit == "text":
+        if first:
+            return F.when(value.isNull() | (value == ""), F.lit("-")).otherwise(value)
+        return F.coalesce(value, F.lit(""))
+    missing = col.isNull()
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+        missing = missing | F.isnan(col)
+    if unit == "onoff":
+        if isinstance(dtype, T.BooleanType):
+            value = F.when(col, F.lit("1")).otherwise(F.lit("0"))
+        elif isinstance(dtype, T.NumericType):
+            value = F.when(col == 1, F.lit("1")).when(col == 0, F.lit("0")).otherwise(value)
+    return F.when(missing, F.lit(na_rep)).otherwise(value)
+
+
+def _format_value(value, display_format) -> str:
+    """A represented cell as text, with the column's display format applied
+    to numbers."""
+    if isinstance(value, str):
+        return value
+    if (
+        display_format is not None
+        and isinstance(value, (int, float))
+        and not isinstance(value, bool)
+    ):
+        return display_format.format(value)
+    return str(value)
 
 
 def _table_to_csv(table, stream: TextIO, sep: str, na_rep: str) -> None:
@@ -367,30 +468,25 @@ def _table_to_csv(table, stream: TextIO, sep: str, na_rep: str) -> None:
     names = table.column_names
     units = table.units
     fmts = [cm[c].display_format for c in names]
+    transposed = table.metadata.transposed
+    stream.write(
+        block_header(
+            table.name, table.destinations, sep, transposed=transposed, names=names, units=units
+        )
+    )
 
-    def fmt(value, f) -> str:
-        if isinstance(value, str):
-            return value
-        if f is not None and isinstance(value, (int, float)) and not isinstance(value, bool):
-            return f.format(value)
-        return str(value)
-
-    if table.metadata.transposed:
+    if transposed:
         # one output line per column: name;unit;v1;v2;...
         rows = [tuple(r) for r in table.df.toLocalIterator()]
-        stream.write(f"**{table.name}*{sep}\n")
-        stream.write(" ".join(str(d) for d in sorted(table.destinations)) + "\n")
         for i, (name, unit, f) in enumerate(zip(names, units, fmts)):
             vals = represent_col_elements((r[i] for r in rows), unit, na_rep)
-            stream.write(name + sep + unit + sep + sep.join(fmt(v, f) for v in vals) + "\n")
+            stream.write(
+                name + sep + unit + sep + sep.join(_format_value(v, f) for v in vals) + "\n"
+            )
         stream.write("\n")
         return
 
-    stream.write(f"**{table.name}{sep}\n")
-    stream.write(" ".join(str(d) for d in sorted(table.destinations)) + "\n")
-    stream.write(sep.join(names) + "\n")
-    stream.write(sep.join(units) + "\n")
     for row in table.df.toLocalIterator():
         vals = represent_row_elements(tuple(row), units, na_rep)
-        stream.write(sep.join(fmt(v, f) for v, f in zip(vals, fmts)) + "\n")
+        stream.write(sep.join(_format_value(v, f) for v, f in zip(vals, fmts)) + "\n")
     stream.write("\n")

@@ -478,7 +478,7 @@ def _write_startable_shard(
 
     from pyspark import TaskContext
 
-    from pdtable_spark.io._represent import represent_row_elements
+    from pdtable_spark.io._represent import block_header, represent_row_elements
 
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else 0
@@ -489,10 +489,7 @@ def _write_startable_shard(
     fname = f"part-{pid:05d}-{tag}{_uuid.uuid4().hex}.csv"
     n = 0
     with open(os.path.join(staging, fname), "w") as out:
-        out.write(f"**{table}{sep}\n")
-        out.write(" ".join(str(d) for d in sorted(destinations)) + "\n")
-        out.write(sep.join(names) + "\n")
-        out.write(sep.join(units) + "\n")
+        out.write(block_header(table, destinations, sep, names=names, units=units))
         for row in itertools.chain([first], iterator):
             vals = represent_row_elements(tuple(row), units, "-")
             out.write(sep.join(str(v) for v in vals) + "\n")

@@ -835,9 +835,9 @@ def test_scan_csv_even_partitions_no_exchange(spark, tmp_path, n_files, min_part
 
 
 def test_scan_csv_reads_empty_distributed_blocks(spark, tmp_path):
-    """write_csv_distributed writes a header-only block for each empty
-    partition; scan_csv must read those as zero rows, datetime columns
-    included."""
+    """More partitions than rows: an empty partition writes no block (or,
+    as partition 0, an empty file), and scan_csv still reads every row,
+    datetime columns included."""
     import datetime as dt
 
     from pdtable_spark.io.csv import write_csv_distributed
@@ -852,3 +852,272 @@ def test_scan_csv_reads_empty_distributed_blocks(spark, tmp_path):
         (dt.datetime(2020, 1, 2, 12, 0), 1.0),
         (dt.datetime(2021, 3, 4, 5, 6, 7), 2.0),
     ]
+
+
+# ---------------------------------------------------------------------------
+# write_csv_distributed renders rows in the JVM
+# ---------------------------------------------------------------------------
+
+_PYTHON_NODES = ("PythonRDD", "MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+
+
+class _PlanListener:
+    """py4j QueryExecutionListener: the executed plan of every finished
+    SQL action."""
+
+    def __init__(self):
+        self.plans = []
+
+    def onSuccess(self, func_name, qe, duration_ns):
+        self.plans.append(qe.executedPlan().toString())
+
+    def onFailure(self, func_name, qe, exception):
+        pass
+
+    class Java:
+        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+
+def _write_plans(spark, write):
+    """Run ``write()`` and return the plans of the SQL actions it ran."""
+    from pyspark.java_gateway import ensure_callback_server_started
+
+    ensure_callback_server_started(spark.sparkContext._gateway)
+    listener = _PlanListener()
+    manager = spark._jsparkSession.listenerManager()
+    manager.register(listener)
+    try:
+        write()
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        manager.unregister(listener)
+    return listener.plans
+
+
+def _data_lines(out_dir):
+    """Every non-blank line after the 4 header lines of each part file."""
+    import glob
+
+    lines = []
+    for p in sorted(glob.glob(out_dir + "/part-*")):
+        with open(p) as f:
+            lines.extend(line for line in f.read().splitlines()[4:] if line)
+    return lines
+
+
+@pytest.fixture
+def process_tz():
+    """Set the driver's process time zone for one test, then restore it."""
+    import os
+    import time
+
+    old = os.environ.get("TZ")
+
+    def set_tz(tz):
+        os.environ["TZ"] = tz
+        time.tzset()
+
+    yield set_tz
+    if old is None:
+        os.environ.pop("TZ", None)
+    else:
+        os.environ["TZ"] = old
+    time.tzset()
+
+
+_ORDINARY = (
+    "**ord;\nall\nname;mass;ok;at;n\ntext;kg;onoff;datetime;-\n"
+    "a;0.0;1;2020-01-02 12:00:00;3\n"
+    "b;14.5;0;2020-01-02 12:00:00.250000;-\n"
+    "c;-;1;-;1234567\n"
+    "d;-0.25;0;1999-12-31 23:59:59.000001;0.001\n\n"
+)
+
+
+def test_write_csv_distributed_runs_no_python(spark, tmp_path):
+    from pdtable_spark.io.csv import write_csv_distributed
+
+    t = TableBundle(read_csv(io.StringIO(_ORDINARY)))["ord"]
+    out = str(tmp_path / "out")
+    plans = _write_plans(spark, lambda: write_csv_distributed(t, out))
+    writes = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+    assert len(writes) == 1, plans
+    for node in _PYTHON_NODES:
+        assert node not in writes[0], writes[0]
+    assert len(_data_lines(out)) == 4
+
+
+def test_write_csv_distributed_lines_match_write_csv(spark, tmp_path, process_tz):
+    """Ordinary values: the same header and byte-identical data lines as
+    write_csv (process and session time zone both UTC)."""
+    import glob
+
+    from pdtable_spark.io.csv import write_csv_distributed
+
+    process_tz("UTC")
+    t = TableBundle(read_csv(io.StringIO(_ORDINARY)))["ord"]
+    out = str(tmp_path / "out")
+    write_csv_distributed(Table(t.df.repartition(3), metadata=t.metadata), out)
+    driver = io.StringIO()
+    write_csv(t, driver)
+    head, body = driver.getvalue().split("\n")[:4], driver.getvalue().split("\n")[4:]
+    for p in glob.glob(out + "/part-*"):
+        lines = open(p).read().splitlines()
+        assert not lines or lines[:4] == head
+    assert sorted(_data_lines(out)) == sorted(line for line in body if line)
+
+
+def test_write_csv_distributed_edge_doubles_round_trip(spark, tmp_path):
+    """Java's spelling of doubles keeps every bit through both readers;
+    NaN and null are written as na_rep."""
+    import glob
+    import math
+    import struct
+
+    from pdtable_spark.io.csv import write_csv_distributed
+
+    values = [1e23, 2.0 ** 60, 5e-324, 1e7, 1e-5, math.inf, -math.inf, -0.0, 0.1, math.nan]
+    df = spark.range(len(values)).select(
+        F.concat(F.lit("r"), F.col("id")).alias("k"),
+        F.element_at(F.array(*[F.lit(v) for v in values]), F.col("id").cast("int") + 1).alias("x"),
+    )
+    out = str(tmp_path / "out")
+    write_csv_distributed(Table(df, name="edge", units=["text", "kg"]), out)
+    cells = {line.split(";")[0]: line.split(";")[1] for line in _data_lines(out)}
+    assert cells["r3"] == "1.0E7" and cells["r5"] == "Infinity" and cells["r9"] == "-"
+
+    def bits(v):
+        return None if v is None or v != v else struct.pack(">d", v)
+
+    want = {f"r{i}": bits(v) for i, v in enumerate(values)}
+    scanned = {r["k"]: bits(r["x"]) for r in scan_csv(spark, out, "edge").df.collect()}
+    assert scanned == want
+    parsed = {}
+    for p in glob.glob(out + "/part-*"):
+        for _, b in read_csv(p, to="parsed"):
+            parsed.update(zip(b.columns["k"], map(bits, b.columns["x"])))
+    assert parsed == want
+
+
+def test_write_csv_distributed_datetimes_follow_session_tz(spark, tmp_path, process_tz):
+    """Under a non-UTC process time zone the JVM still renders datetimes in
+    the session time zone, and write_csv_distributed → scan_csv gives back
+    the datetimes it was given."""
+    from pdtable_spark.io.csv import write_csv_distributed
+
+    process_tz("America/New_York")
+    spelled = ["2020-01-02 12:00:00", "2021-07-04 23:30:15.250000",
+               "1969-12-31 23:59:59.000001", None]
+    jvm = spark.range(len(spelled)).select(
+        F.concat(F.lit("r"), F.col("id")).alias("k"),
+        F.element_at(F.array(*[F.lit(s) for s in spelled]), F.col("id").cast("int") + 1)
+        .cast("timestamp").alias("at"),
+    )
+    text = "**when;\nall\nk;at\ntext;datetime\n" + "".join(
+        f"r{i};{'-' if s is None else s}\n" for i, s in enumerate(spelled)
+    ) + "\n"
+    from_csv = TableBundle(read_csv(io.StringIO(text)))["when"].df
+    for i, df in enumerate((jvm, from_csv)):
+        out = str(tmp_path / f"out{i}")
+        write_csv_distributed(Table(df.repartition(2), name="when", units=["text", "datetime"]), out)
+        if df is jvm:
+            assert sorted(line.split(";")[1] for line in _data_lines(out)) == sorted(
+                "-" if s is None else s for s in spelled
+            )
+        back = {r["k"]: r["at"] for r in scan_csv(spark, out, "when").df.collect()}
+        assert back == {r["k"]: r["at"] for r in df.collect()}
+
+
+def test_write_csv_distributed_display_format(spark, tmp_path):
+    """A display_format column goes through one Python UDF and matches
+    write_csv's formatting."""
+    from pdtable_spark.io.csv import write_csv_distributed
+    from pdtable_spark.model.metadata import ColumnFormat
+
+    t = TableBundle(read_csv(io.StringIO(CSV), filter=lambda bt, n: n == "places"))["places"]
+    cm = t.column_metadata["distance"]
+    cm.display_format = ColumnFormat(2)
+    t._df = t.df.withMetadata("distance", cm.to_field_metadata())
+    out = str(tmp_path / "out")
+    plans = _write_plans(spark, lambda: write_csv_distributed(t, out))
+    assert any("ArrowEvalPython" in p for p in plans), plans
+    driver = io.StringIO()
+    write_csv(t, driver)
+    want = [line for line in driver.getvalue().split("\n")[4:] if line]
+    assert "work;14.50;0" in want
+    assert sorted(_data_lines(out)) == sorted(want)
+
+
+def test_write_csv_distributed_odd_column_names(spark, tmp_path):
+    """Columns whose names hold dots and spaces are addressed as names."""
+    from pdtable_spark.io.csv import write_csv_distributed
+
+    text = "**odd;\nall\na.b;with space;a b.c\n-;m;text\n0;0;v0\n1;2;v1\n2;4;v2\n\n"
+    t = TableBundle(read_csv(io.StringIO(text)))["odd"]
+    out = str(tmp_path / "out")
+    write_csv_distributed(t, out)
+    back = scan_csv(spark, out, "odd")
+    assert back.column_names == ["a.b", "with space", "a b.c"]
+    assert back.units == ["-", "m", "text"]
+    assert sorted(tuple(r) for r in back.df.collect()) == [
+        (0.0, 0.0, "v0"), (1.0, 2.0, "v1"), (2.0, 4.0, "v2")
+    ]
+
+
+def test_null_first_text_cell_keeps_the_block(spark, tmp_path):
+    """A null in the first (text) column is sealed as '-' by both writers;
+    left empty, it ended the block and every later row was dropped."""
+    from pdtable_spark.io.csv import write_csv_distributed
+
+    df = spark.range(5).select(
+        F.when(F.col("id") == 1, F.lit(None)).otherwise(F.concat(F.lit("k"), F.col("id")))
+        .alias("k"),
+        F.col("id").cast("double").alias("v"),
+    )
+    t = Table(df.coalesce(1), name="nk", units=["text", "-"])
+    driver = io.StringIO()
+    write_csv(t, driver)
+    assert "-;1.0" in driver.getvalue().splitlines()
+    driver.seek(0)
+    assert TableBundle(read_csv(driver))["nk"].count() == 5
+    out = str(tmp_path / "out")
+    write_csv_distributed(t, out)
+    assert "-;1.0" in _data_lines(out)
+    assert scan_csv(spark, out, "nk").count() == 5
+
+
+def test_write_csv_distributed_zero_rows(spark, tmp_path):
+    """A table with no rows gives exactly one header-only file, which
+    scan_csv reads as zero rows with the table's units."""
+    import glob
+
+    from pdtable_spark.io.csv import write_csv_distributed
+
+    t = TableBundle(read_csv(io.StringIO(_ORDINARY)))["ord"]
+    out = str(tmp_path / "out")
+    write_csv_distributed(Table(t.df.limit(0), metadata=t.metadata), out)
+    parts = glob.glob(out + "/part-*")
+    assert len(parts) == 1
+    assert open(parts[0]).read() == (
+        "**ord;\nall\nname;mass;ok;at;n\ntext;kg;onoff;datetime;-\n"
+    )
+    back = scan_csv(spark, out, "ord")
+    assert back.count() == 0
+    assert back.units == ["text", "kg", "onoff", "datetime", "-"]
+
+
+def test_scan_csv_directory_skips_hidden_and_empty_files(spark, tmp_path):
+    """A directory expands without _SUCCESS and dot files, and the schema
+    comes from the first file that holds the table."""
+    d = tmp_path / "out"
+    d.mkdir()
+    (d / "_SUCCESS").write_text("")
+    (d / ".part-00001.crc").write_text("junk")
+    (d / "part-00000").write_text("")
+    (d / "part-00001").write_text("**other;\nall\ny\n-\n7\n\n")
+    (d / "part-00002").write_text("**m;\nall\nx\nkg\n1\n2\n")
+    t = scan_csv(spark, str(d), "m")
+    assert t.units == ["kg"]
+    assert sorted(r["x"] for r in t.df.collect()) == [1.0, 2.0]
+    with pytest.raises(LookupError, match="any file"):
+        scan_csv(spark, str(d), "absent")
